@@ -26,23 +26,23 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
-def make_spark(cpus: int, app: str = "zentity-bench"):
+def make_spark(cpus: int, app: str = "zentity-bench", conf: dict | None = None):
+    """The one local-session builder of the bench and the tools; `conf`
+    overrides or adds Spark settings for one caller."""
     from pyspark.sql import SparkSession
 
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
+    settings = {
+        "spark.sql.shuffle.partitions": str(max(cpus * 2, 8)),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.ui.enabled": "false",
+        "spark.driver.memory": "48g",
         # shuffle/spill bytes are the scarce resource both at 100 TB
         # (network) and on this DRAM-capped host: zstd's ~2× better
         # ratio beat lz4 1.44× end-to-end in an interleaved fresh-JVM
         # A/B at pinned local[8] (tools/ab_codec.py, 2026-08-19 01:45Z)
-        .config("spark.io.compression.codec", "zstd")
+        "spark.io.compression.codec": "zstd",
         # zstd's better ratio shrinks COMPRESSED shuffle sizes ~3×, and
         # AQE's coalescing sizes post-shuffle parallelism by compressed
         # bytes: at the default minPartitionSize (1m) the compute-dense
@@ -52,15 +52,19 @@ def make_spark(cpus: int, app: str = "zentity-bench"):
         # stages wide; large shuffles are untouched (they clear 1m
         # per partition anyway). Measured on ngram_jaccard: 33.7s →
         # 9.6s warm under zstd with this alone.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
         # G1 (JDK17 default) throttles allocation-heavy Spark local-mode
         # jobs to ~8 cores' worth of throughput on this class of machine;
         # the throughput collector keeps scaling (measured 2.5-2.7× from
         # local[8] to local[32] on an md5-generation microbench where G1
         # was flat)
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .getOrCreate()
-    )
+        "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
+        **(conf or {}),
+    }
+    builder = SparkSession.builder.master(f"local[{cpus}]").appName(app)
+    for key, value in settings.items():
+        builder = builder.config(key, value)
+    return builder.getOrCreate()
 
 
 def run_pipeline(spark, n_entities: int):

@@ -149,3 +149,173 @@ def test_checkpointed_closure_matches_batch(spark, out_root):
     a = sorted(map(tuple, res["clusters"].collect()))
     b = sorted(map(tuple, batch.clusters.collect()))
     assert a == b
+
+
+# ----------------------------------------------------------------------
+# The stage list, on inline corpora (no reference fixtures needed)
+
+def _split_model(weighted):
+    """r_pe needs phone AND email; a weight on one resolver turns on the
+    weight-tier gate (gate_edges' slow path)."""
+    resolvers = {"r_name": {"attributes": ["name"]},
+                 "r_pe": {"attributes": ["phone", "email"]}}
+    if weighted:
+        resolvers["r_pe"]["weight"] = 1
+    fields = {a: {"attribute": a, "matcher": "m"} for a in ("name", "phone", "email")}
+    return Model({
+        "attributes": {"name": {}, "phone": {}, "email": {}},
+        "resolvers": resolvers,
+        "matchers": {"m": {"clause": {"term": {"{{ field }}": "{{ value }}"}}}},
+        "indices": {idx: {"fields": fields} for idx in ("idx_a", "idx_b")},
+    })
+
+
+def _split_turns(spark, n=6):
+    """Per entity i: a{name,phone} in idx_a and b{name,email} in idx_b
+    link by name; c{phone,email} links only to the closed cluster's
+    phone+email. Every third entity also has a name-only d, and one
+    singleton shares nothing."""
+    rows = []
+    for i in range(n):
+        docs = {f"idx_a/a{i}": [f"name=n{i}", f"phone=p{i}"],
+                f"idx_b/b{i}": [f"name=n{i}", f"email=e{i}"],
+                f"idx_b/c{i}": [f"phone=p{i}", f"email=e{i}"]}
+        if i % 3 == 0:
+            docs[f"idx_a/d{i}"] = [f"name=n{i}"]
+        for conv, texts in docs.items():
+            rows += [(conv, t, "user", text, None, None) for t, text in enumerate(texts)]
+    rows.append(("idx_a/z", 0, "user", "name=zz", None, None))
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string,"
+              " tool string, ts timestamp")
+
+
+_FULL = ResolutionConfig(entity_closure=True, score_candidate_pairs=True)
+_STAGES = ["records", "candidates", "pairs", "edges", "clusters",
+           "clusters_closed", "scored_pairs"]
+
+
+def _assignment(df):
+    return sorted(map(tuple, df.select("record_id", "cluster_id").collect()))
+
+
+def _lineage_stages(spark, store, run_id):
+    return {r["stage"] for r in store.read_all(spark, "metrics").collect()
+            if r["run_id"] == run_id}
+
+
+@pytest.mark.parametrize("weighted", [False, True])
+def test_fused_committed_and_resumed_agree(spark, out_root, weighted):
+    from zentity_spark.pipeline import resolve_all
+
+    turns, model = _split_turns(spark), _split_model(weighted)
+    fused = resolve_all(spark, turns, model, _FULL)
+    fresh = resolve_all_checkpointed(spark, turns, model, out_root,
+                                     input_token="split", config=_FULL)
+    again = resolve_all_checkpointed(spark, turns, model, out_root,
+                                     input_token="split", config=_FULL)
+    clusters = _assignment(fused.clusters)
+    assert _assignment(fresh["clusters"]) == clusters
+    assert _assignment(again["clusters"]) == clusters
+    # closure merged every entity's c into its a/b cluster
+    by_id = dict(clusters)
+    assert by_id["idx_b/c0"] == by_id["idx_a/a0"] == by_id["idx_b/b0"]
+    n_scored = fused.scored_pairs.count()
+    assert n_scored > 0
+    assert fresh["stages"]["scored_pairs"]["rows"] == n_scored
+    assert again["stages"]["scored_pairs"]["rows"] == n_scored
+    assert list(fresh["stages"]) == _STAGES
+    assert all(m.get("resumed") for m in again["stages"].values())
+
+
+def test_crash_at_every_stage_boundary(spark, out_root, monkeypatch):
+    """A crash after stage k commits (later stages' tables gone, and
+    stage k's lineage manifest lost) resumes stages ≤ k, recomputes the
+    rest, backfills stage k's lineage row and ends on the uninterrupted
+    clusters. The values table is built once per fresh run, never on a
+    full resume."""
+    import zentity_spark.pipeline as pl
+
+    calls = []
+    real = pl.build_values
+    monkeypatch.setattr(pl, "build_values",
+                        lambda *a, **k: calls.append(1) or real(*a, **k))
+    turns, model = _split_turns(spark), _split_model(False)
+
+    def run():
+        return resolve_all_checkpointed(spark, turns, model, out_root,
+                                        input_token="split", config=_FULL)
+
+    base = run()
+    assert len(calls) == 1
+    clusters = _assignment(base["clusters"])
+    calls.clear()
+    assert all(m.get("resumed") for m in run()["stages"].values())
+    assert calls == []
+
+    store = SnapshotStore(out_root)
+    for k, name in enumerate(_STAGES):
+        for later in _STAGES[k + 1:]:
+            shutil.rmtree(os.path.join(out_root, later))
+        snap_id = store.latest(name)["snapshot_id"]
+        meta_dir = os.path.join(out_root, "metrics", "snapshots")
+        for f in os.listdir(meta_dir):
+            with open(os.path.join(meta_dir, f)) as fh:
+                if json.load(fh)["fingerprint"] == snap_id:
+                    os.remove(os.path.join(meta_dir, f))
+        assert not store.contains_fingerprint("metrics", snap_id)
+
+        res = run()
+        resumed = [s for s in _STAGES if res["stages"][s].get("resumed")]
+        assert resumed == _STAGES[:k + 1], name
+        assert _assignment(res["clusters"]) == clusters, name
+        assert store.contains_fingerprint("metrics", snap_id), name
+        lineage = _lineage_stages(spark, store, res["run_id"])
+        assert lineage >= {name, *_STAGES[k + 1:]}, name
+
+
+def test_committed_block_cap_leaves_lineage(spark, out_root):
+    """max_block_size truncation leaves a `blocking.dropped` lineage row
+    in committed mode, as the fused result's metrics report it."""
+    from zentity_spark.pipeline import resolve_all
+
+    turns = spark.createDataFrame(
+        [(f"idx_a/x{i}", 0, "user", "name=same", None, None) for i in range(3)]
+        + [("idx_a/y0", 0, "user", "name=pair", None, None),
+           ("idx_a/y1", 0, "user", "name=pair", None, None)],
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp")
+    cfg = ResolutionConfig(entity_closure=False, max_block_size=2)
+    model = _split_model(False)
+    fused = resolve_all(spark, turns, model, cfg)
+    assert dict(fused.metrics)["blocking.dropped_blocks"].count() == 1
+    res = resolve_all_checkpointed(spark, turns, model, out_root,
+                                   input_token="cap", config=cfg)
+    store = SnapshotStore(out_root)
+    assert "blocking.dropped" in _lineage_stages(spark, store, res["run_id"])
+    assert _assignment(res["clusters"]) == _assignment(fused.clusters)
+
+
+def test_tools_do_not_restate_the_stage_list():
+    """The stage sequence lives in pipeline._stages only: no tool or
+    bench script imports the stage functions to run it again."""
+    import ast
+
+    banned = {"blocking_keys", "candidate_pairs", "verify_pairs", "gate_edges",
+              "_build_filtered_values", "_cluster_assignments"}
+    # one stage in isolation, not the sequence: the salt-tier stress run
+    allowed = {("stress_fallbacks.py", "candidate_pairs")}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tools = os.path.join(root, "tools")
+    paths = [os.path.join(tools, f) for f in sorted(os.listdir(tools))
+             if f.endswith(".py")] + [os.path.join(root, "bench.py")]
+    bad = []
+    for path in paths:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom):
+                bad += [(os.path.basename(path), a.name) for a in node.names
+                        if a.name in banned
+                        and (os.path.basename(path), a.name) not in allowed]
+    assert not bad, f"stage functions imported outside pipeline.py: {bad}"

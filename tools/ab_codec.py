@@ -10,25 +10,14 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
+# runs with cwd=ROOT, so `python -c` imports bench from the checkout
 WORKER = """
-import json, sys, time
-sys.path.insert(0, "/root/repo")
-from pyspark.sql import SparkSession
-from bench import run_pipeline
+import json, sys
+from bench import make_spark, run_pipeline
 codec, cpus, ents = sys.argv[1], int(sys.argv[2]), int(sys.argv[3])
-spark = (SparkSession.builder.master(f"local[{cpus}]")
-    .appName(f"ab-{codec}")
-    .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
-    .config("spark.sql.adaptive.enabled", "true")
-    .config("spark.sql.adaptive.skewJoin.enabled", "true")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.driver.memory", "48g")
-    .config("spark.io.compression.codec", codec)
-    .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-    .getOrCreate())
+spark = make_spark(cpus, f"ab-{codec}", conf={"spark.io.compression.codec": codec})
 spark.sparkContext.setLogLevel("ERROR")
 run_pipeline(spark, 2000)
 w, nt, p, r, _ = run_pipeline(spark, ents)
@@ -47,7 +36,7 @@ def main():
             cmd = ["taskset", "-c", f"0-{cpus - 1}", sys.executable, "-c",
                    WORKER, codec, str(cpus), str(ents)]
             proc = subprocess.run(cmd, capture_output=True, text=True,
-                                  timeout=3600)
+                                  timeout=3600, cwd=ROOT)
             lines = [l for l in proc.stdout.strip().splitlines()
                      if l.startswith("{")]
             if proc.returncode != 0 or not lines:

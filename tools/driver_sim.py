@@ -48,17 +48,11 @@ def main():
     first_n = int(sys.argv[2]) if len(sys.argv) > 2 else 50
     only = set(sys.argv[3:])
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry
+    from bench import make_spark
+
+    spark = make_spark(32, "zentity-driver-sim")
 
     qs, oracles = entry.queries(), entry.oracle_sql()
     names = list(qs)[:first_n]

@@ -6,44 +6,32 @@ via the Spark REST status API, and (d) the cap/salt lineage counters
 (key-capped records, dropped blocks) — the design says linear in
 corpus size with no fallback anomalies; this measures one point.
 
+Per-stage numbers come from a resolve_all_checkpointed run into a temp
+root: every stage is a committed snapshot, so a stage's wall is the gap
+between consecutive `committed_at` times (it includes the previous
+stage's read-back and lineage commit), its rows are the manifest's, and
+(d) is read from the `metrics` table. The stage walls sum to more than
+the fused end-to-end wall — committing disables cross-stage pipelining;
+use the fused number for throughput.
+
 Usage: python tools/sf1_run.py [n_entities]
 Prints one JSON line for BASELINE.md.
 """
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-UI_PORT = 4057
-
-
-def make_spark(cpus: int = 32, ui_port: int = UI_PORT,
-               app: str = "zentity-sf1"):
-    from pyspark.sql import SparkSession
-
-    # bench.make_spark minus ui.enabled=false: the REST status API is
-    # the only way to read shuffle bytes without an event-log pass.
-    # ui_port is a STARTING port — Spark retries upward on collision,
-    # which is why readers must use sc.uiWebUrl, never the number here.
-    return (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(max(cpus * 2, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", str(ui_port))
-        .config("spark.driver.memory", "48g")
-        .config("spark.io.compression.codec", "zstd")
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-        .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
-        .getOrCreate()
-    )
+# the REST status API is the only way to read shuffle bytes without an
+# event-log pass. 4057 is a STARTING port — Spark retries upward on
+# collision, which is why readers must use sc.uiWebUrl.
+UI_CONF = {"spark.ui.enabled": "true", "spark.ui.port": "4057"}
 
 
 def _stage_metrics(spark) -> list:
@@ -78,89 +66,58 @@ def shuffle_stats(spark) -> dict:
     }
 
 
-def main():
-    n_entities = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
+def stage_walls(spark, turns, n_entities: int) -> dict:
+    """(b) and (d) from one committed run of bench.py's headline config."""
     from pyspark.sql import functions as F
 
-    from bench import run_pipeline
-    from zentity_spark.blocking import blocking_keys, candidate_pairs
-    from zentity_spark.generator import BENCH_MODEL, synth_transcripts
+    from zentity_spark.generator import BENCH_MODEL
     from zentity_spark.model import Model
-    from zentity_spark.compiler import compile_model
-    from zentity_spark.pipeline import (
-        ResolutionConfig,
-        _build_filtered_values,
-        _cluster_assignments,
-    )
-    from zentity_spark.pairs import gate_edges, verify_pairs
-    from zentity_spark.transcripts import build_records
+    from zentity_spark.pipeline import ResolutionConfig, resolve_all_checkpointed
+    from zentity_spark.storage import SnapshotStore
 
-    spark = make_spark()
+    config = ResolutionConfig(entity_closure=False, max_block_size=5000,
+                              max_value_frequency=100,
+                              score_candidate_pairs=False)
+    root = tempfile.mkdtemp(prefix="sf1-stages-")
+    try:
+        t = time.time()
+        res = resolve_all_checkpointed(spark, turns, Model(BENCH_MODEL), root,
+                                       input_token=f"sf1-{n_entities}",
+                                       config=config)
+        stages = {}
+        for name, m in res["stages"].items():
+            stages[name] = {"sec": round(m["committed_at"] - t, 1), "rows": m["rows"]}
+            t = m["committed_at"]
+        n_clusters = res["clusters"].select("cluster_id").distinct().count()
+        lineage = {
+            r["stage"]: r["rows"]
+            for r in SnapshotStore(root).read_all(spark, "metrics")
+            .where(F.col("run_id") == res["run_id"])
+            .groupBy("stage").agg(F.sum("rows").alias("rows")).collect()
+        }
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    # non-zero key_capped/dropped at this corpus would mean the caps
+    # started biting 10x earlier than designed
+    return {"stage_walls": stages, "clusters_stagewise": n_clusters,
+            "lineage": {"key_capped_records": lineage.get("blocking.key_capped", 0),
+                        "dropped_blocks": lineage.get("blocking.dropped", 0)}}
+
+
+def main():
+    n_entities = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
+    from bench import host_weather_snapshot, make_spark, run_pipeline
+    from zentity_spark.generator import synth_transcripts
+
+    spark = make_spark(32, "zentity-sf1", conf=UI_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     run_pipeline(spark, 1000)  # JVM/codegen warmup, same as bench.py
-
-    from bench import host_weather_snapshot
-
     weather = host_weather_snapshot()
 
     # (a) honest end-to-end wall through the same entry bench.py times
     wall, n_turns, precision, recall, n_clusters = run_pipeline(spark, n_entities)
-
-    # (b) per-stage attribution: same calls in the same order as
-    # pipeline.resolve_all (pipeline.py:117), each stage forced by
-    # localCheckpoint/count so its wall is separable. The sum exceeds
-    # the fused end-to-end wall above — forcing boundaries disables
-    # cross-stage pipelining; use the fused number for throughput.
-    config = ResolutionConfig(entity_closure=False, max_block_size=5000,
-                              max_value_frequency=100,
-                              score_candidate_pairs=False)
-    compiled = compile_model(Model(BENCH_MODEL))
     turns = synth_transcripts(spark, n_entities=n_entities).localCheckpoint()
-    stages = {}
-
-    t = time.time()
-    values = _build_filtered_values(spark, turns, compiled, config)
-    records = build_records(values, compiled, None).localCheckpoint()
-    n_records = records.count()
-    stages["values_records"] = {"sec": round(time.time() - t, 1),
-                                "rows": n_records}
-
-    t = time.time()
-    blocks, key_capped = blocking_keys(
-        records, compiled, max_keys_per_record=config.max_keys_per_record,
-        return_key_capped=True)
-    blocks = blocks.localCheckpoint()
-    stages["blocking_keys"] = {"sec": round(time.time() - t, 1),
-                               "rows": blocks.count()}
-
-    t = time.time()
-    cand, dropped = candidate_pairs(blocks, max_block_size=config.max_block_size)
-    cand = cand.localCheckpoint()
-    stages["candidate_pairs"] = {"sec": round(time.time() - t, 1),
-                                 "rows": cand.count()}
-
-    t = time.time()
-    pairs = verify_pairs(cand, compiled, records)
-    edges = gate_edges(pairs, compiled).localCheckpoint()
-    stages["verify_gate"] = {"sec": round(time.time() - t, 1),
-                             "rows": edges.count()}
-
-    t = time.time()
-    clusters = _cluster_assignments(records, edges, config.cc_max_iterations)
-    n_cl = clusters.select("cluster_id").distinct().count()
-    stages["connected_components"] = {"sec": round(time.time() - t, 1),
-                                      "clusters": n_cl}
-
-    # (d) cap/salt lineage: non-zero key_capped/dropped at this corpus
-    # would mean the caps started biting 10x earlier than designed
-    def _n(x):
-        try:
-            return int(x)
-        except (TypeError, ValueError):
-            return int(x.count())
-
-    lineage = {"key_capped_records": _n(key_capped),
-               "dropped_blocks": None if dropped is None else _n(dropped)}
+    staged = stage_walls(spark, turns, n_entities)
 
     stats = shuffle_stats(spark)
     spark.stop()
@@ -172,9 +129,7 @@ def main():
         "pair_precision": round(precision, 6),
         "pair_recall": round(recall, 6),
         "clusters_end_to_end": n_clusters,
-        "clusters_stagewise": n_cl,
-        "stage_walls": stages,
-        "lineage": lineage,
+        **staged,
         "shuffle": stats,
         "host_weather": weather,
     }, separators=(",", ":")))

@@ -27,9 +27,12 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.sf1_run import make_spark, shuffle_totals  # noqa: E402
+from bench import make_spark  # noqa: E402
+from tools.sf1_run import shuffle_totals  # noqa: E402
 
-UI_PORT = 4058  # starting port only; shuffle_totals reads sc.uiWebUrl
+# the UI's REST API serves shuffle_totals; 4058 is a starting port only,
+# shuffle_totals reads sc.uiWebUrl
+UI_CONF = {"spark.ui.enabled": "true", "spark.ui.port": "4058"}
 
 
 def _assignment_hash(df):
@@ -182,7 +185,7 @@ def stress_salt(spark, hot_block_size: int) -> dict:
 def main():
     n_nodes = int(sys.argv[1]) if len(sys.argv) > 1 else 800_000
     hot_block_size = int(sys.argv[2]) if len(sys.argv) > 2 else 5_000
-    spark = make_spark(ui_port=UI_PORT, app="zentity-stress-fallbacks")
+    spark = make_spark(32, "zentity-stress-fallbacks", conf=UI_CONF)
     spark.sparkContext.setLogLevel("ERROR")
 
     from bench import host_weather_snapshot

@@ -1,13 +1,21 @@
 """Batch resolution pipeline: transcripts → clusters.
 
-Stage flow (SURVEY.md §3.1 "Spark equivalent lifecycle"):
+The stage list (SURVEY.md §3.1 "Spark equivalent lifecycle") is written
+once, in `_stages`; each stage's build reads the outputs of earlier ones:
 
-  1. scan + extract     transcripts → long values → wide records
-  2. blocking           per-resolver composite keys → candidate pairs
-  3. verification       vectorized matcher predicates → matched pairs
-  4. weight gating      → edges
-  5. clustering         large-star/small-star CC → clusters
-  6. (optional) entity closure — see below
+  records          scan + extract: transcripts → long values → wide records
+  candidates       per-resolver composite blocking keys → candidate pairs
+  pairs            vectorized matcher predicates → matched pairs
+  edges            weight-tier gating
+  clusters         large-star/small-star connected components
+  clusters_closed  entity closure, see below (config.entity_closure)
+  scored_pairs     similarity features per candidate pair
+                   (config.score_candidate_pairs)
+
+`_run_stages` executes the list. The entry points differ only in how a
+stage's output is kept: `resolve_all` keeps it in memory
+(localCheckpoint where two consumers read it), `resolve_all_checkpointed`
+commits it as a snapshot and serves it from that snapshot on rerun.
 
 Entity closure: the reference matches documents against the ACCUMULATED
 value set of the growing entity (Job.java:1096-1113), so a document can
@@ -114,6 +122,101 @@ def _cluster_assignments(records: DataFrame, edges: DataFrame,
     )
 
 
+# ----------------------------------------------------------------------
+# The stage list. Builds look the stage functions up as module globals
+# at call time, so a caller can patch them here (tracing, tests).
+
+class _Run:
+    """Inputs of one pass over the stage list, the values table (built
+    lazily, at most once: records and the closure read it, and a resumed
+    records stage never needs it), and the truncation frames the stages
+    report as (metric name, DataFrame)."""
+
+    def __init__(self, spark, turns, compiled, config):
+        self.spark, self.turns = spark, turns
+        self.compiled, self.config = compiled, config
+        self.parsed = parse_turns(turns)
+        self.metrics: list = []
+        self._values = None
+
+    def values(self) -> DataFrame:
+        if self._values is None:
+            self._values = _build_filtered_values(
+                self.spark, self.turns, self.compiled, self.config
+            )
+        return self._values
+
+
+def _records(run, out):
+    return build_records(run.values(), run.compiled, run.parsed)
+
+
+def _candidates(run, out):
+    blocks, key_capped = blocking_keys(
+        out["records"], run.compiled,
+        max_keys_per_record=run.config.max_keys_per_record, return_key_capped=True,
+    )
+    cand, dropped = candidate_pairs(blocks, max_block_size=run.config.max_block_size)
+    # both caps are recall losses and must stay observable (PLANS rule 10)
+    run.metrics.append(("blocking.key_capped_records", key_capped))
+    if dropped is not None:
+        run.metrics.append(("blocking.dropped_blocks", dropped))
+    return cand
+
+
+def _pairs(run, out):
+    # keeps the weight-gate columns (app_*/fields_*), so a committed
+    # edges stage never re-runs blocking + verify for weighted models
+    return verify_pairs(out["candidates"], run.compiled, out["records"])
+
+
+def _edges(run, out):
+    return gate_edges(out["pairs"], run.compiled)
+
+
+def _clusters(run, out):
+    return _cluster_assignments(out["records"], out["edges"], run.config.cc_max_iterations)
+
+
+def _clusters_closed(run, out):
+    return _entity_closure(run.spark, run.values(), out["records"], out["edges"],
+                           out["clusters"], run.compiled, run.config)
+
+
+def _scored_pairs(run, out):
+    from zentity_spark.scoring import score_pairs
+    from zentity_spark.transcripts import assemble_conversations
+
+    # ALL candidate pairs (pre-verification) carry similarity features
+    conv_texts = assemble_conversations(run.turns).select(
+        F.col("conv_id").alias("record_id"), "conv_text"
+    )
+    return score_pairs(
+        out["candidates"].select("id_l", "id_r").dropDuplicates(["id_l", "id_r"]),
+        conv_texts,
+    )
+
+
+def _stages(config: ResolutionConfig) -> list:
+    """The stage list in run order: (name, build(run, earlier outputs))."""
+    stages = [("records", _records), ("candidates", _candidates),
+              ("pairs", _pairs), ("edges", _edges), ("clusters", _clusters)]
+    if config.entity_closure:
+        stages.append(("clusters_closed", _clusters_closed))
+    if config.score_candidate_pairs:
+        stages.append(("scored_pairs", _scored_pairs))
+    return stages
+
+
+def _run_stages(run: _Run, keep) -> dict:
+    """Run the stage list. keep(name, build) stores one stage's output
+    and returns the DataFrame later stages read."""
+    out = {}
+    for name, build in _stages(run.config):
+        out[name] = keep(name, lambda: build(run, out))
+    return out
+
+
 def resolve_all(
     spark: SparkSession,
     turns: DataFrame,
@@ -123,45 +226,21 @@ def resolve_all(
     """Resolve ALL entities in one batch."""
     config = config or ResolutionConfig()
     compiled = model if isinstance(model, CompiledModel) else compile_model(model)
-
-    parsed = parse_turns(turns)
-    values = _build_filtered_values(spark, turns, compiled, config)
-    records = build_records(values, compiled, parsed).localCheckpoint()
-
-    blocks, key_capped = blocking_keys(
-        records, compiled, max_keys_per_record=config.max_keys_per_record,
-        return_key_capped=True,
-    )
-    cand, dropped = candidate_pairs(blocks, max_block_size=config.max_block_size)
+    run = _Run(spark, turns, compiled, config)
+    # rule 18 (two consumers): records feed blocking, verify and CC;
+    # edges feed CC and the closure; with scoring on, the candidates feed
+    # verify and the scored pairs — without a checkpoint each consumer
+    # re-runs the whole lineage behind it
+    checkpointed = {"records", "edges"}
     if config.score_candidate_pairs:
-        # the candidate set feeds TWO consumers (verify→edges and the
-        # scored-pairs artifact); without this the scored collect
-        # re-runs the whole blocking + self-join lineage a second time
-        cand = cand.localCheckpoint()
-    pairs = verify_pairs(cand, compiled, records)
-    edges = gate_edges(pairs, compiled).localCheckpoint()
-    clusters = _cluster_assignments(records, edges, config.cc_max_iterations)
+        checkpointed.add("candidates")
 
-    metrics = [("blocking.key_capped_records", key_capped)]
-    if dropped is not None:
-        metrics.append(("blocking.dropped_blocks", dropped))
+    def keep(name, build):
+        df = build()
+        return df.localCheckpoint() if name in checkpointed else df
 
-    if config.entity_closure:
-        clusters = _entity_closure(
-            spark, values, records, edges, clusters, compiled, config
-        )
-
-    scored = None
-    if config.score_candidate_pairs:
-        from zentity_spark.scoring import score_pairs
-        from zentity_spark.transcripts import assemble_conversations
-
-        conv_texts = assemble_conversations(turns).select(
-            F.col("conv_id").alias("record_id"), "conv_text"
-        )
-        scored = score_pairs(
-            cand.select("id_l", "id_r").dropDuplicates(["id_l", "id_r"]), conv_texts
-        )
+    out = _run_stages(run, keep)
+    clusters = out.get("clusters_closed", out["clusters"])
 
     entity_ids = None
     if config.prev_assignments is not None:
@@ -175,9 +254,10 @@ def resolve_all(
             xwalk.select("cluster_id", "entity_id"), "cluster_id"
         ).select("record_id", "entity_id")
 
-    return ResolutionResult(records=records, pairs=pairs, edges=edges,
-                            clusters=clusters, metrics=metrics,
-                            scored_pairs=scored, entity_ids=entity_ids)
+    return ResolutionResult(records=out["records"], pairs=out["pairs"],
+                            edges=out["edges"], clusters=clusters,
+                            metrics=run.metrics, scored_pairs=out.get("scored_pairs"),
+                            entity_ids=entity_ids)
 
 
 def _entity_closure(spark, values, records, edges, clusters, compiled, config) -> DataFrame:
@@ -277,6 +357,11 @@ def _fingerprint(model_spec: dict, config: ResolutionConfig, input_token: str) -
     return hashlib.md5(blob.encode()).hexdigest()
 
 
+# lineage stage of each truncation metric in the `metrics` table
+_LINEAGE_STAGE = {"blocking.key_capped_records": "blocking.key_capped",
+                  "blocking.dropped_blocks": "blocking.dropped"}
+
+
 def resolve_all_checkpointed(
     spark: SparkSession,
     turns: DataFrame,
@@ -286,12 +371,11 @@ def resolve_all_checkpointed(
     config: ResolutionConfig | None = None,
     run_id: str | None = None,
 ) -> dict:
-    """Stage-committed resolution: records → pairs → edges → clusters,
-    each stage committed as a snapshot (storage.SnapshotStore) and served
-    from its last snapshot on rerun with an unchanged fingerprint. Every
-    stage also commits per-partition lineage counters to the `metrics`
-    table. Returns {stage: manifest} for the run."""
-    import json as _json
+    """Stage-committed resolution: every stage of the stage list is
+    committed as a snapshot (storage.SnapshotStore) and served from its
+    last snapshot on rerun with an unchanged fingerprint. Every stage
+    also commits per-partition lineage counters to the `metrics` table.
+    Returns {stage: manifest} for the run."""
     import uuid as _uuid
 
     from zentity_spark.storage import SnapshotStore, partition_metrics
@@ -306,99 +390,35 @@ def resolve_all_checkpointed(
     fp = _fingerprint(model_spec, config, input_token)
     run_id = run_id or _uuid.uuid4().hex[:8]
     store = SnapshotStore(output_root)
+    run = _Run(spark, turns, compiled, config)
     manifests = {}
 
     def stage(name, build):
-        """Resume-or-compute one stage."""
+        """Resume-or-compute one stage, then make sure its lineage row
+        exists. The lineage commit's fingerprint is the stage snapshot's
+        id, so a crash between the two commits is backfilled on resume
+        (the stage's own rows; its truncation rows would need the build
+        to run again)."""
         snap = store.latest(name, fingerprint=fp)
+        truncations = []
         if snap is not None:
             manifests[name] = {**snap, "resumed": True}
-            return store.read(spark, name, fingerprint=fp)
-        df = build()
-        manifests[name] = store.commit(df, name, stage=name, fingerprint=fp)
-        out = store.read(spark, name, fingerprint=fp)
-        store.commit(partition_metrics(out, name, run_id), "metrics", stage=name,
-                     fingerprint="")  # metrics are append-only observability
+            out = store.read(spark, name, fingerprint=fp)
+            if store.contains_fingerprint("metrics", snap["snapshot_id"]):
+                return out
+        else:
+            n = len(run.metrics)
+            df = build()
+            snap = manifests[name] = store.commit(df, name, stage=name, fingerprint=fp)
+            truncations = run.metrics[n:]
+            out = store.read(spark, name, fingerprint=fp)
+        lineage = partition_metrics(out, name, run_id)
+        for metric, frame in truncations:
+            lineage = lineage.unionByName(
+                partition_metrics(frame, _LINEAGE_STAGE[metric], run_id))
+        store.commit(lineage, "metrics", stage=name, fingerprint=snap["snapshot_id"])
         return out
 
-    parsed = parse_turns(turns)
-
-    records = stage(
-        "records",
-        lambda: build_records(
-            _build_filtered_values(spark, turns, compiled, config), compiled, parsed
-        ),
-    )
-
-    _capbox = {}
-
-    def build_cand():
-        blocks, key_capped = blocking_keys(
-            records, compiled, max_keys_per_record=config.max_keys_per_record,
-            return_key_capped=True,
-        )
-        _capbox["key_capped"] = key_capped
-        cand, _ = candidate_pairs(blocks, max_block_size=config.max_block_size)
-        return cand
-
-    # candidates are a first-class committed stage: blocking runs ONCE
-    # per run, both the verify and scored-pairs stages derive from the
-    # same committed pair set, and the candidate counts get lineage rows
-    cand = stage("candidates", build_cand)
-    if "key_capped" in _capbox:
-        # lineage for the max_keys_per_record truncation (recall loss
-        # must be observable, same as the dropped-blocks cap)
-        store.commit(
-            partition_metrics(_capbox["key_capped"], "blocking.key_capped", run_id),
-            "metrics", stage="blocking.key_capped", fingerprint="",
-        )
-
-    # the pairs stage keeps the weight-gate columns (app_*/fields_*) so
-    # the edges stage never re-runs blocking+verify for weighted models
-    pairs_full = stage("pairs", lambda: verify_pairs(cand, compiled, records))
-
-    if compiled.weights_all_equal:
-        edges = stage(
-            "edges", lambda: pairs_full.select("id_l", "id_r", "matched_resolvers")
-        )
-    else:
-        edges = stage("edges", lambda: gate_edges(pairs_full, compiled))
-
-    clusters = stage(
-        "clusters",
-        lambda: _cluster_assignments(records, edges, config.cc_max_iterations),
-    )
-
-    if config.entity_closure:
-        # same accumulate-and-requery closure as resolve_all (clusters
-        # re-blocked as super-records until fixpoint), committed as its
-        # own stage so reruns resume past it
-        def build_closed():
-            values = _build_filtered_values(spark, turns, compiled, config)
-            return _entity_closure(
-                spark, values, records,
-                edges.select("id_l", "id_r"), clusters, compiled, config,
-            )
-
-        clusters = stage("clusters_closed", build_closed)
-
-    if config.score_candidate_pairs:
-        from zentity_spark.scoring import score_pairs
-        from zentity_spark.transcripts import assemble_conversations
-
-        def build_scored():
-            # score ALL candidate pairs (pre-verification) — the same
-            # artifact resolve_all produces, so both entry points agree
-            # on which pairs carry similarity features
-            conv_texts = assemble_conversations(turns).select(
-                F.col("conv_id").alias("record_id"), "conv_text"
-            )
-            return score_pairs(
-                cand.select("id_l", "id_r").dropDuplicates(["id_l", "id_r"]),
-                conv_texts,
-            )
-
-        stage("scored_pairs", build_scored)
-
+    out = _run_stages(run, stage)
     return {"run_id": run_id, "fingerprint": fp, "stages": manifests,
-            "clusters": clusters}
+            "clusters": out.get("clusters_closed", out["clusters"])}
