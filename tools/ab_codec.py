@@ -1,6 +1,6 @@
 """Interleaved fresh-subprocess A/B of spark.io.compression.codec on
-the headline pipeline (same methodology as bench.scaling_probe: fresh
-JVM per run, pinned, best-of interleaved reps).
+the headline pipeline: a fresh JVM per run, pinned to CPUs 0..cpus-1,
+best of interleaved reps.
 
 Usage: python tools/ab_codec.py [cpus] [reps] [entities]
 """

@@ -106,13 +106,12 @@ def stage_walls(spark, turns, n_entities: int) -> dict:
 
 def main():
     n_entities = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
-    from bench import host_weather_snapshot, make_spark, run_pipeline
+    from bench import make_spark, run_pipeline
     from zentity_spark.generator import synth_transcripts
 
     spark = make_spark(32, "zentity-sf1", conf=UI_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     run_pipeline(spark, 1000)  # JVM/codegen warmup, same as bench.py
-    weather = host_weather_snapshot()
 
     # (a) honest end-to-end wall through the same entry bench.py times
     wall, n_turns, precision, recall, n_clusters = run_pipeline(spark, n_entities)
@@ -131,7 +130,6 @@ def main():
         "clusters_end_to_end": n_clusters,
         **staged,
         "shuffle": stats,
-        "host_weather": weather,
     }, separators=(",", ":")))
 
 

@@ -187,15 +187,10 @@ def main():
     hot_block_size = int(sys.argv[2]) if len(sys.argv) > 2 else 5_000
     spark = make_spark(32, "zentity-stress-fallbacks", conf=UI_CONF)
     spark.sparkContext.setLogLevel("ERROR")
-
-    from bench import host_weather_snapshot
-
-    weather = host_weather_snapshot()
     cc = stress_cc(spark, n_nodes)
     salt = stress_salt(spark, hot_block_size)
     spark.stop()
     print(json.dumps({
-        "host_weather": weather,
         "cc_distributed_regime": cc,
         "salt_tier_regime": salt,
     }))
