@@ -12,7 +12,7 @@ import json
 
 import pytest
 
-from tests.conftest import load_reference_model
+from tests.conftest import load_reference_model, requires_reference
 from tests.fixture_data import fixture_transcripts
 from zentity_spark.bulk import bulk_resolve_response, split_bulk_lines
 from zentity_spark.envelope import request_error_json
@@ -51,6 +51,16 @@ def store(tmp_path):
 
 # ---------------------------------------------------------------- invalid jobs
 
+# a valid model with the index and field the reasons below name; each
+# case breaks one part of it
+VALID_MODEL = {
+    "attributes": {"attribute_a": {}},
+    "resolvers": {"resolver_a": {"attributes": ["attribute_a"]}},
+    "matchers": {"matcher_a": {"clause": {"match": {"{{ field }}": "{{ value }}"}}}},
+    "indices": {"zentity_test_index_a": {"fields": {
+        "field_a.clean": {"attribute": "attribute_a", "matcher": "matcher_a"}}}},
+}
+
 
 @pytest.mark.parametrize(
     "mutate, reason",
@@ -76,7 +86,7 @@ def test_invalid_job_model(mutate, reason):
     """testInvalidJob*Empty (IT:1636-1784): exact validation reason and
     the ES-style request error body with type=validation_exception and
     status=400."""
-    spec = copy.deepcopy(load_reference_model("TestEntityModelA.json"))
+    spec = copy.deepcopy(VALID_MODEL)
     mutate(spec)
     with pytest.raises(ValidationException) as exc:
         Model(spec)
@@ -88,9 +98,11 @@ def test_invalid_job_model(mutate, reason):
     assert body["status"] == 400
 
 
-def test_unknown_entity_type_request_error(store):
+def test_unknown_entity_type_request_error(tmp_path):
     """ResolutionAction.java:102 — unknown entity type is a 404
     NotFoundException with the reference's exact message."""
+    store = ModelStore(str(tmp_path / "models"))
+    store.setup()
     with pytest.raises(NotFoundException) as exc:
         store.get("zentity_test_entity_unknown")
     assert str(exc.value) == "Entity type 'zentity_test_entity_unknown' not found."
@@ -109,6 +121,7 @@ def _items(resp: str) -> list[dict]:
     return body["items"]
 
 
+@requires_reference
 def test_bulk_resolution(spark, turns, store):
     """testBulkResolution (IT:1851-1913): URL entity type, per-item
     `_source`/`_explanation` param overrides, two successful items each
@@ -142,6 +155,7 @@ def test_bulk_resolution(spark, turns, store):
     assert "_explanation" in first_explanation_hit
 
 
+@requires_reference
 def test_bulk_resolution_with_malformed(spark, turns, store):
     """testBulkResolutionWithMalformed (IT:1787-1848): malformed params
     line, unknown entity type, and empty payload line each fail ONLY
@@ -173,6 +187,7 @@ def test_bulk_resolution_with_malformed(spark, turns, store):
     assert items[3]["hits"]["total"] > 0
 
 
+@requires_reference
 def test_bulk_resolution_override_entity_type(spark, turns, store):
     """testBulkResolutionOverrideEntityType (IT:1915-1960): params-line
     entity_type overrides the URL default; overriding to an unknown type
@@ -199,6 +214,7 @@ def test_bulk_resolution_override_entity_type(spark, turns, store):
     assert bad["hits"] == {"total": 0, "hits": []}
 
 
+@requires_reference
 def test_job_embedded_model(spark, turns):
     """testJobEmbeddedModel (IT:694-712): a payload-embedded model (no
     store) resolves like testJobNoScope — 40 docs — and `_attributes`
@@ -247,6 +263,7 @@ def test_setup_acknowledged_and_deconflict(tmp_path):
     assert body["status"] == 400
 
 
+@requires_reference
 def test_bulk_max_time_per_query_param(spark, turns, store):
     """max_time_per_query rides the same per-item-params > request-params
     walk as max_hops (ResolutionAction.java:134): a valid budget on one
@@ -272,6 +289,7 @@ def test_bulk_max_time_per_query_param(spark, turns, store):
     assert "unit is missing" in json.dumps(bad["error"])
 
 
+@requires_reference
 def test_bulk_audit_rows_reach_metrics_table(spark, turns, store):
     """S7 for the bulk path: each bulk item's per-hop query audit rows
     (incl. timed_out) are captured and survive into the metrics table

@@ -7,9 +7,7 @@ import shutil
 
 import pytest
 
-from tests.conftest import load_reference_model
-from tests.fixture_data import fixture_transcripts
-from zentity_spark.model import Model
+from tests.fixture_data import split_model, split_turns
 from zentity_spark.pipeline import ResolutionConfig, resolve_all_checkpointed
 from zentity_spark.storage import SnapshotStore
 
@@ -19,21 +17,10 @@ def out_root(tmp_path):
     return str(tmp_path / "warehouse")
 
 
-def _model():
-    m = Model(load_reference_model("TestEntityModelA.json"))
-    m.prune(
-        {"include": {"indices": ["zentity_test_index_a", "zentity_test_index_b",
-                                 "zentity_test_index_c"],
-                     "resolvers": ["resolver_a", "resolver_b"]}}
-    )
-    return m
-
-
 def test_stage_commits_and_metrics(spark, out_root):
-    turns = fixture_transcripts(spark)
-    turns = turns.where(turns.conv_id.rlike("^zentity_test_index_[abc]/"))
+    turns = split_turns(spark)
     res = resolve_all_checkpointed(
-        spark, turns, _model(), out_root, input_token="fixture-abc"
+        spark, turns, split_model(), out_root, input_token="split"
     )
     store = SnapshotStore(out_root)
     for stage in ("records", "pairs", "edges", "clusters"):
@@ -51,13 +38,12 @@ def test_stage_commits_and_metrics(spark, out_root):
 
 def test_resume_from_snapshots(spark, out_root):
     """Second run with identical input/config resumes every stage."""
-    turns = fixture_transcripts(spark)
-    turns = turns.where(turns.conv_id.rlike("^zentity_test_index_[abc]/"))
+    turns = split_turns(spark)
     first = resolve_all_checkpointed(
-        spark, turns, _model(), out_root, input_token="fixture-abc"
+        spark, turns, split_model(), out_root, input_token="split"
     )
     second = resolve_all_checkpointed(
-        spark, turns, _model(), out_root, input_token="fixture-abc"
+        spark, turns, split_model(), out_root, input_token="split"
     )
     for stage in ("records", "pairs", "edges", "clusters"):
         assert second["stages"][stage].get("resumed"), f"{stage} not resumed"
@@ -69,15 +55,14 @@ def test_resume_from_snapshots(spark, out_root):
 def test_resume_after_partial_crash(spark, out_root):
     """Kill/resume: wipe the clusters stage (simulating a crash before its
     commit); rerun recomputes ONLY clusters, resuming earlier stages."""
-    turns = fixture_transcripts(spark)
-    turns = turns.where(turns.conv_id.rlike("^zentity_test_index_[abc]/"))
+    turns = split_turns(spark)
     first = resolve_all_checkpointed(
-        spark, turns, _model(), out_root, input_token="fixture-abc"
+        spark, turns, split_model(), out_root, input_token="split"
     )
     a = sorted(map(tuple, first["clusters"].collect()))
     shutil.rmtree(os.path.join(out_root, "clusters"))
     second = resolve_all_checkpointed(
-        spark, turns, _model(), out_root, input_token="fixture-abc"
+        spark, turns, split_model(), out_root, input_token="split"
     )
     assert second["stages"]["records"].get("resumed")
     assert second["stages"]["pairs"].get("resumed")
@@ -88,11 +73,10 @@ def test_resume_after_partial_crash(spark, out_root):
 
 def test_config_change_invalidates(spark, out_root):
     """A changed fingerprint (different config) must NOT resume."""
-    turns = fixture_transcripts(spark)
-    turns = turns.where(turns.conv_id.rlike("^zentity_test_index_[abc]/"))
-    resolve_all_checkpointed(spark, turns, _model(), out_root, input_token="fixture-abc")
+    turns = split_turns(spark)
+    resolve_all_checkpointed(spark, turns, split_model(), out_root, input_token="split")
     second = resolve_all_checkpointed(
-        spark, turns, _model(), out_root, input_token="fixture-abc",
+        spark, turns, split_model(), out_root, input_token="split",
         config=ResolutionConfig(max_block_size=123),
     )
     assert not second["stages"]["records"].get("resumed")
@@ -101,8 +85,8 @@ def test_config_change_invalidates(spark, out_root):
 def test_crash_consistency_orphan_data(spark, out_root):
     """Data written without a manifest (crash between write and commit)
     must be invisible to readers."""
-    turns = fixture_transcripts(spark)
-    turns = turns.where(turns.conv_id.rlike("^zentity_test_index_a/"))
+    turns = split_turns(spark)
+    turns = turns.where(turns.conv_id.rlike("^idx_a/"))
     store = SnapshotStore(out_root)
     # simulate orphan: data dir exists, no snapshot manifest
     df = turns.limit(5)
@@ -114,10 +98,13 @@ def test_crash_consistency_orphan_data(spark, out_root):
 def test_candidates_stage_and_key_cap_lineage(spark, out_root):
     """Round 2: candidates are a committed stage (blocking runs once per
     run) and the max_keys_per_record truncation leaves a lineage row."""
-    turns = fixture_transcripts(spark)
-    turns = turns.where(turns.conv_id.rlike("^zentity_test_index_[abc]/"))
+    turns = split_turns(spark)
+    # one record with three names: three r_name keys, over a cap of 2
+    turns = turns.unionByName(spark.createDataFrame(
+        [("idx_a/w", t, "user", f"name=w{t}", None, None) for t in range(3)],
+        turns.schema))
     res = resolve_all_checkpointed(
-        spark, turns, _model(), out_root, input_token="fixture-abc",
+        spark, turns, split_model(), out_root, input_token="split",
         config=ResolutionConfig(entity_closure=False, max_keys_per_record=2),
     )
     store = SnapshotStore(out_root)
@@ -126,7 +113,7 @@ def test_candidates_stage_and_key_cap_lineage(spark, out_root):
     stages = {r["stage"] for r in metrics.collect()}
     assert "blocking.key_capped" in stages  # cap=2 must truncate somebody
     second = resolve_all_checkpointed(
-        spark, turns, _model(), out_root, input_token="fixture-abc",
+        spark, turns, split_model(), out_root, input_token="split",
         config=ResolutionConfig(entity_closure=False, max_keys_per_record=2),
     )
     assert second["stages"]["candidates"].get("resumed")
@@ -138,57 +125,20 @@ def test_checkpointed_closure_matches_batch(spark, out_root):
     round 2)."""
     from zentity_spark.pipeline import resolve_all
 
-    turns = fixture_transcripts(spark)
-    turns = turns.where(turns.conv_id.rlike("^zentity_test_index_[abc]/"))
+    turns = split_turns(spark)
     cfg = ResolutionConfig(entity_closure=True)
     res = resolve_all_checkpointed(
-        spark, turns, _model(), out_root, input_token="fixture-abc", config=cfg
+        spark, turns, split_model(), out_root, input_token="split", config=cfg
     )
     assert "clusters_closed" in res["stages"]
-    batch = resolve_all(spark, turns, _model(), cfg)
+    batch = resolve_all(spark, turns, split_model(), cfg)
     a = sorted(map(tuple, res["clusters"].collect()))
     b = sorted(map(tuple, batch.clusters.collect()))
     assert a == b
 
 
 # ----------------------------------------------------------------------
-# The stage list, on inline corpora (no reference fixtures needed)
-
-def _split_model(weighted):
-    """r_pe needs phone AND email; a weight on one resolver turns on the
-    weight-tier gate (gate_edges' slow path)."""
-    resolvers = {"r_name": {"attributes": ["name"]},
-                 "r_pe": {"attributes": ["phone", "email"]}}
-    if weighted:
-        resolvers["r_pe"]["weight"] = 1
-    fields = {a: {"attribute": a, "matcher": "m"} for a in ("name", "phone", "email")}
-    return Model({
-        "attributes": {"name": {}, "phone": {}, "email": {}},
-        "resolvers": resolvers,
-        "matchers": {"m": {"clause": {"term": {"{{ field }}": "{{ value }}"}}}},
-        "indices": {idx: {"fields": fields} for idx in ("idx_a", "idx_b")},
-    })
-
-
-def _split_turns(spark, n=6):
-    """Per entity i: a{name,phone} in idx_a and b{name,email} in idx_b
-    link by name; c{phone,email} links only to the closed cluster's
-    phone+email. Every third entity also has a name-only d, and one
-    singleton shares nothing."""
-    rows = []
-    for i in range(n):
-        docs = {f"idx_a/a{i}": [f"name=n{i}", f"phone=p{i}"],
-                f"idx_b/b{i}": [f"name=n{i}", f"email=e{i}"],
-                f"idx_b/c{i}": [f"phone=p{i}", f"email=e{i}"]}
-        if i % 3 == 0:
-            docs[f"idx_a/d{i}"] = [f"name=n{i}"]
-        for conv, texts in docs.items():
-            rows += [(conv, t, "user", text, None, None) for t, text in enumerate(texts)]
-    rows.append(("idx_a/z", 0, "user", "name=zz", None, None))
-    return spark.createDataFrame(
-        rows, "conv_id string, turn_idx int, role string, text string,"
-              " tool string, ts timestamp")
-
+# The stage list, on the split-attribute corpus
 
 _FULL = ResolutionConfig(entity_closure=True, score_candidate_pairs=True)
 _STAGES = ["records", "candidates", "pairs", "edges", "clusters",
@@ -208,7 +158,7 @@ def _lineage_stages(spark, store, run_id):
 def test_fused_committed_and_resumed_agree(spark, out_root, weighted):
     from zentity_spark.pipeline import resolve_all
 
-    turns, model = _split_turns(spark), _split_model(weighted)
+    turns, model = split_turns(spark), split_model(weighted)
     fused = resolve_all(spark, turns, model, _FULL)
     fresh = resolve_all_checkpointed(spark, turns, model, out_root,
                                      input_token="split", config=_FULL)
@@ -240,7 +190,7 @@ def test_crash_at_every_stage_boundary(spark, out_root, monkeypatch):
     real = pl.build_values
     monkeypatch.setattr(pl, "build_values",
                         lambda *a, **k: calls.append(1) or real(*a, **k))
-    turns, model = _split_turns(spark), _split_model(False)
+    turns, model = split_turns(spark), split_model(False)
 
     def run():
         return resolve_all_checkpointed(spark, turns, model, out_root,
@@ -286,7 +236,7 @@ def test_committed_block_cap_leaves_lineage(spark, out_root):
         "conv_id string, turn_idx int, role string, text string,"
         " tool string, ts timestamp")
     cfg = ResolutionConfig(entity_closure=False, max_block_size=2)
-    model = _split_model(False)
+    model = split_model(False)
     fused = resolve_all(spark, turns, model, cfg)
     assert dict(fused.metrics)["blocking.dropped_blocks"].count() == 1
     res = resolve_all_checkpointed(spark, turns, model, out_root,

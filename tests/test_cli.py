@@ -10,35 +10,15 @@ import os
 import pytest
 from pyspark.sql import SparkSession
 
-from tests.fixture_data import fixture_transcripts
+from tests.fixture_data import ARRAYS_MODEL as MODEL, arrays_transcripts
 from zentity_spark import cli
-
-MODEL = {
-    "attributes": {"string": {}, "array": {}},
-    "resolvers": {"string": {"attributes": ["string"]},
-                  "array": {"attributes": ["array"]}},
-    "matchers": {"exact": {"clause": {"term": {"{{ field }}": "{{ value }}"}}}},
-    "indices": {
-        "zentity_test_index_arrays": {
-            "fields": {
-                "string": {"attribute": "string", "matcher": "exact"},
-                "array_1": {"attribute": "array", "matcher": "exact"},
-                "array_2": {"attribute": "array", "matcher": "exact"},
-                "array_3": {"attribute": "array", "matcher": "exact"},
-                "array_4": {"attribute": "array", "matcher": "exact"},
-            }
-        }
-    },
-}
 
 
 @pytest.fixture()
 def setup(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(SparkSession, "stop", lambda self: None)
     turns_path = str(tmp_path / "turns")
-    fixture_transcripts(spark, filenames=("TestDataArrays.txt",)).write.parquet(
-        turns_path
-    )
+    arrays_transcripts(spark).write.parquet(turns_path)
     model_path = str(tmp_path / "model.json")
     with open(model_path, "w") as fh:
         json.dump(MODEL, fh)

@@ -15,8 +15,8 @@ import json
 
 import pytest
 
-from tests.conftest import load_reference_model
-from tests.fixture_data import fixture_transcripts
+from tests.conftest import load_reference_model, requires_reference
+from tests.fixture_data import ARRAYS_MODEL, arrays_transcripts, fixture_transcripts
 from zentity_spark.envelope import resolve_response, serialize_exception
 from zentity_spark.model import Model
 from zentity_spark.resolve import Input, SeededConfig
@@ -43,6 +43,7 @@ def _doc_by_id(resp: str) -> dict:
     return {h["_id"]: h for h in json.loads(resp)["hits"]["hits"]}
 
 
+@requires_reference
 def test_arrays_golden_envelope(spark):
     """ResolutionActionIT.java:1490-1515 — _attributes and _explanation
     byte parity on the arrays fixture."""
@@ -60,6 +61,7 @@ def test_arrays_golden_envelope(spark):
         assert f'"_explanation":{expected}' in resp, doc_id
 
 
+@requires_reference
 def test_explanation_golden_envelope(spark):
     """ResolutionActionIT.java:761-793 — _explanation byte parity for
     a0/a1/a2 (max_hops=1, max_docs_per_query=2, index a only)."""
@@ -91,10 +93,10 @@ def test_explanation_golden_envelope(spark):
 
 
 def test_envelope_shape_and_queries(spark):
-    turns = fixture_transcripts(spark, filenames=("TestDataArrays.txt",))
+    turns = arrays_transcripts(spark)
     resp = resolve_response(
         spark, turns,
-        Model(load_reference_model("TestEntityModelArrays.json")),
+        Model(ARRAYS_MODEL),
         Input(attributes={"string": ["abc"]}),
         include_queries=True,
     )
@@ -114,10 +116,10 @@ def test_envelope_shape_and_queries(spark):
 def test_error_envelope(spark):
     """Structured error envelope (by=zentity, Java canonical type name,
     reason, stack_trace) — ResolutionActionIT.java:1447-1459 assertions."""
-    turns = fixture_transcripts(spark, filenames=("TestDataArrays.txt",))
+    turns = arrays_transcripts(spark)
     resp = resolve_response(
         spark, turns,
-        Model(load_reference_model("TestEntityModelArrays.json")),
+        Model(ARRAYS_MODEL),
         Input(attributes={"no_such_attribute": ["x"]}),
     )
     obj = json.loads(resp)
@@ -138,9 +140,9 @@ def test_source_echo_for_document_corpora(spark):
     """_source=true echoes the original document JSON for corpora
     ingested from raw docs (transcripts have no _source; the reference
     moves _source to the end of the doc — Job.java:995-1002)."""
-    from tests.fixture_data import fixture_docs_df
+    from tests.fixture_data import arrays_docs_df
 
-    docs = fixture_docs_df(spark, filenames=("TestDataArrays.txt",))
+    docs = arrays_docs_df(spark)
     from zentity_spark.documents import documents_to_turns
 
     turns = documents_to_turns(docs)
@@ -149,7 +151,7 @@ def test_source_echo_for_document_corpora(spark):
     )
     resp = resolve_response(
         spark, turns,
-        Model(load_reference_model("TestEntityModelArrays.json")),
+        Model(ARRAYS_MODEL),
         Input(attributes={"string": ["abc"]}),
         include_attributes=False, include_source=True, source_docs=source_docs,
     )

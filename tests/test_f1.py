@@ -11,13 +11,15 @@ import itertools
 
 import pytest
 
-from tests.conftest import load_reference_model
+from tests.conftest import load_reference_model, requires_reference
 from tests.fixture_data import fixture_transcripts
 from zentity_spark.blocking import blocking_keys
 from zentity_spark.compiler import compile_model
 from zentity_spark.model import Model
 from zentity_spark.pipeline import resolve_all
 from zentity_spark.transcripts import build_records, build_values
+
+pytestmark = requires_reference
 
 
 def _labeled_pairs(spark, turns, model, golden_clusters):

@@ -4,7 +4,7 @@ semantics) plus parsing of the real fixture models."""
 
 import pytest
 
-from tests.conftest import load_reference_model
+from tests.conftest import load_reference_model, requires_reference
 from zentity_spark.errors import ValidationException
 from zentity_spark.model import Model, validate_strict_name
 
@@ -168,6 +168,7 @@ def test_index_field_no_matcher_is_unusable_not_invalid():
 
 
 # Real fixture models must all parse
+@requires_reference
 @pytest.mark.parametrize(
     "name",
     [
@@ -182,6 +183,7 @@ def test_reference_fixture_models_parse(name):
     assert m.attributes and m.resolvers and m.matchers and m.indices
 
 
+@requires_reference
 def test_model_a_shape():
     m = Model(load_reference_model("TestEntityModelA.json"))
     assert len(m.attributes) == 14
@@ -198,6 +200,7 @@ def test_model_a_shape():
     assert m.indices["zentity_test_index_d"].fields["field_c.keyword"].quality == 0.0
 
 
+@requires_reference
 def test_weight_groups_model_b():
     m = Model(load_reference_model("TestEntityModelB.json"))
     groups = m.resolver_weight_groups(list(m.resolvers))
@@ -207,7 +210,16 @@ def test_weight_groups_model_b():
 
 
 def test_scope_prune_include_exclude():
-    m = Model(load_reference_model("TestEntityModelA.json"))
+    fields = {"field_a": {"attribute": "attribute_a", "matcher": "m"},
+              "field_c": {"attribute": "attribute_c", "matcher": "m"}}
+    m = Model({
+        "attributes": {"attribute_a": {}, "attribute_c": {}},
+        "resolvers": {"resolver_a": {"attributes": ["attribute_a"]},
+                      "resolver_c": {"attributes": ["attribute_c"]}},
+        "matchers": VALID["matchers"],
+        "indices": {"zentity_test_index_a": {"fields": fields},
+                    "zentity_test_index_b": {"fields": fields}},
+    })
     m.prune({"include": {"indices": ["zentity_test_index_a"]},
              "exclude": {"resolvers": ["resolver_c"]}})
     assert list(m.indices) == ["zentity_test_index_a"]

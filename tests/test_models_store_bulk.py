@@ -5,7 +5,7 @@ import json
 
 import pytest
 
-from tests.conftest import load_reference_model
+from tests.conftest import load_reference_model, requires_reference
 from tests.fixture_data import fixture_transcripts
 from zentity_spark.bulk import bulk_resolve, split_bulk_entries
 from zentity_spark.errors import ValidationException, ZentityError
@@ -75,6 +75,7 @@ def test_split_bulk_entries_odd_lines():
         split_bulk_entries('{}\n{"attributes": {}}\n{}')
 
 
+@requires_reference
 def test_bulk_resolve(spark, tmp_path):
     store = ModelStore(str(tmp_path / "models"))
     store.setup()
@@ -112,6 +113,7 @@ def test_bulk_resolve(spark, tmp_path):
 
 # ---------------------------------------------------------------- error taxonomies
 
+@requires_reference
 def test_zentity_error_type_mismatch(spark):
     """testJobZentityError (ResolutionActionIT.java:1446-1462): resolving
     with a value that doesn't match the attribute type → ValidationException
@@ -125,6 +127,7 @@ def test_zentity_error_type_mismatch(spark):
                 Input(attributes={"attribute_a": ["a_10"], "attribute_b": ["b_10"]}))
 
 
+@requires_reference
 def test_engine_error_malformed_matcher():
     """testJobElasticsearchError analog: a matcher clause the engine can't
     interpret fails at compile with an engine-side (non-validation) error."""

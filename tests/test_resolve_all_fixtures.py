@@ -7,8 +7,13 @@ closure, which is what the batch pipeline computes)."""
 
 import pytest
 
-from tests.conftest import load_reference_model
-from tests.fixture_data import fixture_transcripts, golden_clusters
+from tests.conftest import load_reference_model, requires_reference
+from tests.fixture_data import (
+    fixture_transcripts,
+    golden_clusters,
+    split_model,
+    split_turns,
+)
 from zentity_spark.model import Model
 from zentity_spark.pipeline import ResolutionConfig, resolve_all
 
@@ -30,6 +35,7 @@ def turns_abc(spark):
     return t.where(t.conv_id.rlike("^zentity_test_index_[abc]/")).cache()
 
 
+@requires_reference
 def test_job_attributes_cluster(spark, turns_abc):
     """testJobAttributes (ResolutionActionIT.java:726-742): with model A
     scoped to indices a,b,c and resolvers a,b, the entity containing a0
@@ -52,6 +58,7 @@ def test_job_attributes_cluster(spark, turns_abc):
     assert _cluster_of(result.clusters, "zentity_test_index_a/a0") == expected
 
 
+@requires_reference
 def test_resolver_weight_cluster(spark):
     """testJobResolverWeight (ResolutionActionIT.java:1384-1397): model B
     on index a only; the entity containing a2 is exactly {a2,a3,a4,a5} —
@@ -66,6 +73,7 @@ def test_resolver_weight_cluster(spark):
     )
 
 
+@requires_reference
 def test_arrays_cluster(spark):
     """testJobArrays (ResolutionActionIT.java:1485-1515): docs 1 and 2 of
     the arrays index link transitively via array value 444."""
@@ -75,6 +83,7 @@ def test_arrays_cluster(spark):
     assert _cluster_of(result.clusters, "zentity_test_index_arrays/1") == {"1", "2"}
 
 
+@requires_reference
 def test_object_arrays_cluster(spark):
     """testJobObjectArrays: docs 1,2 share phone 555-987-6543 and
     last_name jones (resolver name_phone)."""
@@ -84,6 +93,7 @@ def test_object_arrays_cluster(spark):
     assert _cluster_of(result.clusters, "zentity_test_index_object_arrays/1") == {"1", "2"}
 
 
+@requires_reference
 def test_no_scope_whole_dataset_collapses(spark):
     """testJobNoScope (ResolutionActionIT.java:686-692): with the full
     model A over all four indices, the dataset collapses into one
@@ -95,32 +105,21 @@ def test_no_scope_whole_dataset_collapses(spark):
     assert len(members) == 40
 
 
-def test_prev_assignments_stable_ids(spark, turns_abc):
-    """Run-over-run entity-id persistence: resolve the a,b,c fixture
+def test_prev_assignments_stable_ids(spark):
+    """Run-over-run entity-id persistence: resolve the split-attribute
     corpus, feed the assignment back as prev_assignments on an
     unchanged second run — every record keeps its entity id and nothing
     mints a new: id (split/merge/new-cluster edge semantics are covered
     record-level in tests/test_cluster_ops.py)."""
-    model = Model(load_reference_model("TestEntityModelA.json"))
-    model.prune(
-        {
-            "include": {
-                "indices": [
-                    "zentity_test_index_a",
-                    "zentity_test_index_b",
-                    "zentity_test_index_c",
-                ],
-                "resolvers": ["resolver_a", "resolver_b"],
-            }
-        }
-    )
-    first = resolve_all(spark, turns_abc, model)
+    turns = split_turns(spark)
+    model = split_model()
+    first = resolve_all(spark, turns, model)
     prev = first.clusters.selectExpr(
         "record_id", "concat('E', cluster_id) AS entity_id"
     )
 
     cfg = ResolutionConfig(prev_assignments=prev)
-    second = resolve_all(spark, turns_abc, model, cfg)
+    second = resolve_all(spark, turns, model, cfg)
     assert second.entity_ids is not None
     got = {r["record_id"]: r["entity_id"] for r in second.entity_ids.collect()}
     for r in prev.collect():

@@ -3,10 +3,12 @@ golden (id, hop) sets (ResolutionActionIT.java, cited per test)."""
 
 import pytest
 
-from tests.conftest import load_reference_model
+from tests.conftest import load_reference_model, requires_reference
 from tests.fixture_data import fixture_transcripts
 from zentity_spark.model import Model
 from zentity_spark.resolve import Input, SeededConfig, resolve
+
+pytestmark = requires_reference
 
 SCOPE_ABC = {
     "include": {

@@ -81,9 +81,7 @@ def test_resolve_all_batch_path_never_collects_data(spark, monkeypatch):
     import zentity_spark.clustering as cl
     import zentity_spark.pipeline as pl
     import zentity_spark.resolve as rv
-    from pyspark.sql import DataFrame
-    from tests.conftest import load_reference_model
-    from tests.fixture_data import fixture_transcripts
+    from zentity_spark.generator import BENCH_MODEL, synth_transcripts
     from zentity_spark.model import Model
 
     def _boom(*a, **k):
@@ -95,6 +93,9 @@ def test_resolve_all_batch_path_never_collects_data(spark, monkeypatch):
         functools.partial(cl.connected_components, driver_edge_cap=0))
 
     callers = []
+    # the class sessions actually return: Spark 4's classic DataFrame
+    # overrides collect, so a spy on pyspark.sql.DataFrame never fires
+    DataFrame = type(spark.range(0))
     real_collect = DataFrame.collect
 
     def spy(self):
@@ -102,8 +103,8 @@ def test_resolve_all_batch_path_never_collects_data(spark, monkeypatch):
         return real_collect(self)
 
     monkeypatch.setattr(DataFrame, "collect", spy)
-    model = Model(load_reference_model("TestEntityModelA.json"))
-    turns = fixture_transcripts(spark)
+    model = Model(BENCH_MODEL)
+    turns = synth_transcripts(spark, n_entities=60)
     result = pl.resolve_all(spark, turns, model)
     n = result.clusters.count()
     assert n > 0

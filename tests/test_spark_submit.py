@@ -27,12 +27,10 @@ def _build_zip(path: str) -> None:
 @pytest.mark.skipif(shutil.which("spark-submit") is None,
                     reason="spark-submit not on PATH")
 def test_spark_submit_py_files(spark, tmp_path):
-    from tests.fixture_data import fixture_transcripts
+    from tests.fixture_data import arrays_transcripts
 
     turns_path = str(tmp_path / "turns")
-    fixture_transcripts(spark, filenames=("TestDataArrays.txt",)).write.parquet(
-        turns_path
-    )
+    arrays_transcripts(spark).write.parquet(turns_path)
     model = {
         "attributes": {"string": {}},
         "resolvers": {"string": {"attributes": ["string"]}},

@@ -10,9 +10,10 @@ import time
 
 import pytest
 
-from tests.conftest import load_reference_model
+from tests.conftest import load_reference_model, requires_reference
 from tests.fixture_data import fixture_transcripts
 from zentity_spark.errors import ValidationException
+from zentity_spark.generator import BENCH_MODEL, synth_transcripts
 from zentity_spark.model import Model
 from zentity_spark.resolve import (
     Input,
@@ -133,7 +134,7 @@ def test_budget_propagates_real_failures(spark):
 
 # ---------------------------------------------------------------- seeded
 
-def test_resolve_hop_query_times_out(spark, turns, monkeypatch):
+def test_resolve_hop_query_times_out(spark, monkeypatch):
     """Traversal behavior under timeouts: every hop query exceeding its
     budget yields zero hits, the traversal terminates at the hop-0
     fixpoint instead of erroring, and every audit row records
@@ -154,8 +155,9 @@ def test_resolve_hop_query_times_out(spark, turns, monkeypatch):
     monkeypatch.setattr(rmod, "_collect_with_budget", fake_budget_collect)
     capture = {}
     hits = resolve(
-        spark, turns, model_a(),
-        Input(attributes={"attribute_a": ["a_00"]}, scope=SCOPE_ABC),
+        spark, synth_transcripts(spark, n_entities=20, filler_turns=0),
+        Model(BENCH_MODEL),
+        Input(attributes={"email": ["u0@example.com"]}),
         SeededConfig(max_time_per_query="1s"),
         _capture=capture,
     )
@@ -168,6 +170,7 @@ def test_resolve_hop_query_times_out(spark, turns, monkeypatch):
     assert {q["hop"] for q in log} == {0}  # no new docs → fixpoint at hop 0
 
 
+@requires_reference
 def test_resolve_under_generous_budget(spark, turns):
     """With a budget no query hits, results are identical to the
     unbudgeted golden traversal (ResolutionActionIT.java:726-742) and
