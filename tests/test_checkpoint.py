@@ -7,7 +7,9 @@ import shutil
 
 import pytest
 
-from tests.fixture_data import split_model, split_turns
+from tests.conftest import load_reference_model, requires_reference
+from tests.fixture_data import fixture_transcripts, split_model, split_turns
+from zentity_spark.model import Model
 from zentity_spark.pipeline import ResolutionConfig, resolve_all_checkpointed
 from zentity_spark.storage import SnapshotStore
 
@@ -15,6 +17,16 @@ from zentity_spark.storage import SnapshotStore
 @pytest.fixture()
 def out_root(tmp_path):
     return str(tmp_path / "warehouse")
+
+
+def _model():
+    m = Model(load_reference_model("TestEntityModelA.json"))
+    m.prune(
+        {"include": {"indices": ["zentity_test_index_a", "zentity_test_index_b",
+                                 "zentity_test_index_c"],
+                     "resolvers": ["resolver_a", "resolver_b"]}}
+    )
+    return m
 
 
 def test_stage_commits_and_metrics(spark, out_root):
@@ -36,14 +48,16 @@ def test_stage_commits_and_metrics(spark, out_root):
     assert all(r["run_id"] == res["run_id"] for r in rows)
 
 
+@requires_reference
 def test_resume_from_snapshots(spark, out_root):
     """Second run with identical input/config resumes every stage."""
-    turns = split_turns(spark)
+    turns = fixture_transcripts(spark)
+    turns = turns.where(turns.conv_id.rlike("^zentity_test_index_[abc]/"))
     first = resolve_all_checkpointed(
-        spark, turns, split_model(), out_root, input_token="split"
+        spark, turns, _model(), out_root, input_token="fixture-abc"
     )
     second = resolve_all_checkpointed(
-        spark, turns, split_model(), out_root, input_token="split"
+        spark, turns, _model(), out_root, input_token="fixture-abc"
     )
     for stage in ("records", "pairs", "edges", "clusters"):
         assert second["stages"][stage].get("resumed"), f"{stage} not resumed"
@@ -52,17 +66,19 @@ def test_resume_from_snapshots(spark, out_root):
     assert a == b
 
 
+@requires_reference
 def test_resume_after_partial_crash(spark, out_root):
     """Kill/resume: wipe the clusters stage (simulating a crash before its
     commit); rerun recomputes ONLY clusters, resuming earlier stages."""
-    turns = split_turns(spark)
+    turns = fixture_transcripts(spark)
+    turns = turns.where(turns.conv_id.rlike("^zentity_test_index_[abc]/"))
     first = resolve_all_checkpointed(
-        spark, turns, split_model(), out_root, input_token="split"
+        spark, turns, _model(), out_root, input_token="fixture-abc"
     )
     a = sorted(map(tuple, first["clusters"].collect()))
     shutil.rmtree(os.path.join(out_root, "clusters"))
     second = resolve_all_checkpointed(
-        spark, turns, split_model(), out_root, input_token="split"
+        spark, turns, _model(), out_root, input_token="fixture-abc"
     )
     assert second["stages"]["records"].get("resumed")
     assert second["stages"]["pairs"].get("resumed")
@@ -119,19 +135,21 @@ def test_candidates_stage_and_key_cap_lineage(spark, out_root):
     assert second["stages"]["candidates"].get("resumed")
 
 
+@requires_reference
 def test_checkpointed_closure_matches_batch(spark, out_root):
     """entity_closure in the checkpointed path must produce the same
     clusters as resolve_all with closure (it was silently skipped before
     round 2)."""
     from zentity_spark.pipeline import resolve_all
 
-    turns = split_turns(spark)
+    turns = fixture_transcripts(spark)
+    turns = turns.where(turns.conv_id.rlike("^zentity_test_index_[abc]/"))
     cfg = ResolutionConfig(entity_closure=True)
     res = resolve_all_checkpointed(
-        spark, turns, split_model(), out_root, input_token="split", config=cfg
+        spark, turns, _model(), out_root, input_token="fixture-abc", config=cfg
     )
     assert "clusters_closed" in res["stages"]
-    batch = resolve_all(spark, turns, split_model(), cfg)
+    batch = resolve_all(spark, turns, _model(), cfg)
     a = sorted(map(tuple, res["clusters"].collect()))
     b = sorted(map(tuple, batch.clusters.collect()))
     assert a == b

@@ -81,8 +81,7 @@ def test_resolve_all_batch_path_never_collects_data(spark, monkeypatch):
     import zentity_spark.clustering as cl
     import zentity_spark.pipeline as pl
     import zentity_spark.resolve as rv
-    from zentity_spark.generator import BENCH_MODEL, synth_transcripts
-    from zentity_spark.model import Model
+    from tests.fixture_data import split_model, split_turns
 
     def _boom(*a, **k):
         raise AssertionError("_collect_with_budget entered from resolve_all")
@@ -103,8 +102,8 @@ def test_resolve_all_batch_path_never_collects_data(spark, monkeypatch):
         return real_collect(self)
 
     monkeypatch.setattr(DataFrame, "collect", spy)
-    model = Model(BENCH_MODEL)
-    turns = synth_transcripts(spark, n_entities=60)
+    model = split_model(weighted=True)
+    turns = split_turns(spark)
     result = pl.resolve_all(spark, turns, model)
     n = result.clusters.count()
     assert n > 0

@@ -11,9 +11,8 @@ import time
 import pytest
 
 from tests.conftest import load_reference_model, requires_reference
-from tests.fixture_data import fixture_transcripts
+from tests.fixture_data import fixture_transcripts, split_model, split_turns
 from zentity_spark.errors import ValidationException
-from zentity_spark.generator import BENCH_MODEL, synth_transcripts
 from zentity_spark.model import Model
 from zentity_spark.resolve import (
     Input,
@@ -155,9 +154,8 @@ def test_resolve_hop_query_times_out(spark, monkeypatch):
     monkeypatch.setattr(rmod, "_collect_with_budget", fake_budget_collect)
     capture = {}
     hits = resolve(
-        spark, synth_transcripts(spark, n_entities=20, filler_turns=0),
-        Model(BENCH_MODEL),
-        Input(attributes={"email": ["u0@example.com"]}),
+        spark, split_turns(spark), split_model(),
+        Input(attributes={"name": ["n0"]}),
         SeededConfig(max_time_per_query="1s"),
         _capture=capture,
     )
