@@ -207,3 +207,18 @@ def test_apply_review_decisions_validation(spark):
             spark.createDataFrame(
                 [("a", "b", "match"), ("b", "a", "non_match")],
                 "src string, dst string, decision string"))
+
+
+@pytest.mark.parametrize("cap", [0, 3, 4, 1 << 62])
+def test_connected_components_regimes_agree(spark, cap):
+    """The driver regime's bounded probe: at most cap edges stay on the
+    driver (cap=4 holds all 4 distinct edges, cap=3 overflows into the
+    star loop, cap=0 skips the probe), and a cap past a Java int still
+    runs. Every regime labels each node with its component minimum."""
+    from zentity_spark.clustering import connected_components
+
+    edges = _df(spark, [("b", "a"), ("c", "b"), ("c", "b"), ("d", "d"),
+                        ("x", "y"), ("z", "y")], "src string, dst string")
+    got = sorted(map(tuple, connected_components(edges, driver_edge_cap=cap).collect()))
+    assert got == [("a", "a"), ("b", "a"), ("c", "a"),
+                   ("x", "x"), ("y", "x"), ("z", "x")]

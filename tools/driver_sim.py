@@ -52,7 +52,7 @@ def main():
     import __spark_entry__ as entry
     from bench import make_spark
 
-    spark = make_spark(32, "zentity-driver-sim")
+    spark = make_spark(len(os.sched_getaffinity(0)), "zentity-driver-sim")
 
     qs, oracles = entry.queries(), entry.oracle_sql()
     names = list(qs)[:first_n]

@@ -73,7 +73,8 @@ def main():
 
     from bench import make_spark
 
-    spark = make_spark(int(os.environ.get("SPARK_GRAFT_CPUS", "32")), "oracle-check")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    spark = make_spark(cpus, "oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

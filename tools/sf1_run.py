@@ -109,7 +109,7 @@ def main():
     from bench import make_spark, run_pipeline
     from zentity_spark.generator import synth_transcripts
 
-    spark = make_spark(32, "zentity-sf1", conf=UI_CONF)
+    spark = make_spark(len(os.sched_getaffinity(0)), "zentity-sf1", conf=UI_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     run_pipeline(spark, 1000)  # JVM/codegen warmup, same as bench.py
 

@@ -185,7 +185,8 @@ def stress_salt(spark, hot_block_size: int) -> dict:
 def main():
     n_nodes = int(sys.argv[1]) if len(sys.argv) > 1 else 800_000
     hot_block_size = int(sys.argv[2]) if len(sys.argv) > 2 else 5_000
-    spark = make_spark(32, "zentity-stress-fallbacks", conf=UI_CONF)
+    spark = make_spark(len(os.sched_getaffinity(0)), "zentity-stress-fallbacks",
+                       conf=UI_CONF)
     spark.sparkContext.setLogLevel("ERROR")
     cc = stress_cc(spark, n_nodes)
     salt = stress_salt(spark, hot_block_size)

@@ -107,10 +107,10 @@ def connected_components(edges: DataFrame, max_iterations: int = 50,
     edges) as their own clusters.
 
     Two regimes (same policy as bfs_depths): an edge set at or under
-    driver_edge_cap — already counted for shuffle sizing anyway — is
-    collected once and solved with union-find (microseconds, vs ~7
-    star rounds × ~3 jobs each for a typical graph; measured ~5× at
-    bench scale). The cap bounds driver memory the way a broadcast
+    driver_edge_cap — probed by collecting at most cap + 1 edges, so
+    the probe is the collect — is solved with union-find (microseconds,
+    vs ~7 star rounds × ~3 jobs each for a typical graph; measured ~5×
+    at bench scale). The cap bounds driver memory the way a broadcast
     threshold does (~50 B/edge → ~50 MB at the default). Above it, the
     large-star/small-star loop runs fully distributed — that path's
     cost is O(E log n) shuffles at edge-sized parallelism and never
@@ -135,17 +135,19 @@ def connected_components(edges: DataFrame, max_iterations: int = 50,
         .localCheckpoint()
     )
     spark = e.sparkSession
+    if driver_edge_cap > 0:
+        # one bounded collect job both decides the regime and carries
+        # the edges (the cap bounds it to ~50 MB). coalesce(1) keeps it
+        # one job: a bare limit scans 1, then 4, 16, … partitions, one
+        # job each; toLocalIterator costs a job per partition
+        cap = min(driver_edge_cap, 2**31 - 2)  # limit() takes a Java int
+        rows = e.coalesce(1).limit(cap + 1).collect()
+        if len(rows) <= cap:
+            assignments = _driver_union_find((r[0], r[1]) for r in rows)
+            return spark.createDataFrame(
+                assignments, "record_id string, cluster_id string"
+            )
     n_edges = e.count()
-    if n_edges <= driver_edge_cap:
-        # one collect job (the cap bounds it to ~50 MB) — toLocalIterator
-        # would cost one round-trip job per partition, which at 32
-        # partitions is most of a second of pure scheduling
-        assignments = _driver_union_find(
-            (r[0], r[1]) for r in e.collect()
-        )
-        return spark.createDataFrame(
-            assignments, "record_id string, cluster_id string"
-        )
     try:
         session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     except (TypeError, ValueError):

@@ -267,11 +267,9 @@ def _entity_closure(spark, values, records, edges, clusters, compiled, config) -
     # the raw turns) — materialize once, not once per round
     values = values.localCheckpoint()
     for _ in range(config.closure_max_rounds):
+        # ≤1 cluster needs no guard: blocking finds no inter-cluster
+        # pair, so the empty-delta test below ends the loop
         clusters = clusters.localCheckpoint()
-        n_clusters = clusters.select("cluster_id").distinct().count()
-        if n_clusters <= 1:
-            break
-
         # cluster-level wide records: the union of member value material
         # ACROSS sources — build_records groups by (record_id, source),
         # so the member docs' sources must collapse or a cluster spanning
@@ -307,12 +305,16 @@ def _entity_closure(spark, values, records, edges, clusters, compiled, config) -
                 )
                 .drop("_af")
             )
+        # rule 18: blocking's branches and verify's two joins all read
+        # the super-records — build them once per round, not per reader
+        crecords = crecords.localCheckpoint()
         cblocks = blocking_keys(
             crecords, compiled, max_keys_per_record=config.max_keys_per_record
         )
         ccand, _ = candidate_pairs(cblocks, max_block_size=config.max_block_size)
         cpairs = verify_pairs(ccand, compiled, crecords)
-        cedges = gate_edges(cpairs, compiled).select("id_l", "id_r")
+        # materialized once: the emptiness test and the union read it
+        cedges = gate_edges(cpairs, compiled).select("id_l", "id_r").localCheckpoint()
         if cedges.isEmpty():
             break
         # cluster ids are real record ids (component minimum) — new
